@@ -30,19 +30,14 @@ initial one: no extra pass over the edges anywhere.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bluegraph_spark.plans.checkpoint import SuperstepCheckpointer
-from bluegraph_spark.plans.isolation import loop_partitions, loop_session, rebind
-from bluegraph_spark.plans.stats_guard import (
-    release_local_checkpoint,
-    stats_safe_local_checkpoint,
-)
+from bluegraph_spark.plans.loop import SuperstepLoop
 
 
 @dataclass
@@ -57,34 +52,22 @@ class ComponentsResult:
     round_exchanges: int | None = None
 
 
-def _sig_cols() -> list:
+def _signature(m: dict[str, Any], last: dict[str, Any] | None) -> dict[str, Any]:
     """(count, bit_xor of per-row xxhash64) — the convergence signature.
 
     ``bit_xor`` is order-insensitive and cannot overflow, so it is safe under
     ``spark.sql.ansi.enabled=true`` (a ``sum`` of 64-bit hashes overflows long
     on the second row). Edge sets are distinct within a round, so XOR-
-    cancellation of duplicate rows cannot occur.
+    cancellation of duplicate rows cannot occur. The round converged when
+    its signature equals the previous round's.
     """
-    return [
-        F.count(F.lit(1)).alias("cnt"),
-        F.bit_xor(F.xxhash64("a", "b")).alias("h"),
-    ]
+    sig = (int(m["rows"]), int(m["h"] or 0))
+    prev = (last or {}).get("sig_cnt"), (last or {}).get("sig_hash")
+    return {"sig_cnt": sig[0], "sig_hash": sig[1], "converged": sig == prev}
 
 
-def _materialize_with_sig(
-    e: DataFrame,
-    rnd: int,
-    checkpointer: SuperstepCheckpointer | None,
-) -> tuple[DataFrame, tuple[int, int]]:
-    """Checkpoint/localCheckpoint ``e``; the signature rides the same job."""
-    obs = Observation(f"cc_sig_r{rnd}_{time.time_ns()}")
-    e = e.observe(obs, *_sig_cols())
-    if checkpointer is not None:
-        e = checkpointer.save(rnd, e)
-    else:
-        e = stats_safe_local_checkpoint(e)
-    m = obs.get
-    return e, (int(m["cnt"] or 0), int(m["h"] or 0))
+def _sig_hash():
+    return F.bit_xor(F.xxhash64("a", "b")).alias("h")
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -115,7 +98,9 @@ def _small_star(e: DataFrame) -> DataFrame:
     return redirect.unionByName(self_edge).distinct()
 
 
-def _cc_round(e: DataFrame, n_parts: int) -> tuple[DataFrame, list[DataFrame]]:
+def _cc_round(
+    e: DataFrame, n_parts: int, persist: Callable[[DataFrame], DataFrame]
+) -> DataFrame:
     """One large-star + small-star round with an explicit exchange budget.
 
     Semantically identical to ``_small_star(_large_star(e))`` (the
@@ -126,25 +111,23 @@ def _cc_round(e: DataFrame, n_parts: int) -> tuple[DataFrame, list[DataFrame]]:
     layout, final distinct) instead of the 10 the naive plan runs when the
     unpersisted union is recomputed on both consumer branches. Skew safety
     is unchanged: min is still a partial-aggregating groupBy, never a
-    whole-group window buffer. Returns (round_output, caches) — the caller
-    unpersists the caches after materializing the output.
+    whole-group window buffer. ``persist`` caches the two working sets
+    until the round's output is materialized.
     """
-    sym = (
+    sym = persist(
         e.select("a", "b")
         .unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .repartition(n_parts, "a")
         .sortWithinPartitions("a")
-        .persist()
     )
     mins = sym.groupBy("a").agg(F.min("b").alias("_mv"))
     mins = mins.select("a", F.least("_mv", F.col("a")).alias("_m"))
-    ls = (
+    ls = persist(
         sym.join(mins, "a")
         .filter(F.col("b") > F.col("a"))
         .select(F.col("b").alias("a"), F.col("_m").alias("b"))
         .repartition(n_parts, "a")
         .sortWithinPartitions("a")
-        .persist()
     )
     mins2 = ls.groupBy("a").agg(F.min("b").alias("_m"))
     redirect = (
@@ -152,8 +135,7 @@ def _cc_round(e: DataFrame, n_parts: int) -> tuple[DataFrame, list[DataFrame]]:
         .filter(F.col("b") != F.col("_m"))
         .select(F.col("b").alias("a"), F.col("_m").alias("b"))
     )
-    out = redirect.unionByName(mins2.select("a", F.col("_m").alias("b"))).distinct()
-    return out, [sym, ls]
+    return redirect.unionByName(mins2.select("a", F.col("_m").alias("b"))).distinct()
 
 
 def connected_components(
@@ -175,108 +157,41 @@ def connected_components(
     ``newSession()`` of the caller's SparkContext, so the caller's conf is
     never mutated and concurrent planning on it is unaffected.
     """
-    caller = edges.sparkSession
-    spark = loop_session(caller)
-    edges = rebind(edges, spark)
-    if nodes is not None:
-        nodes = rebind(nodes, spark)
-    # Ids keep their native type (numeric min for longs, lexicographic min
-    # for strings): long comparisons and shuffles are several times cheaper
-    # than strings at 10^9-vertex scale, and every step below only needs an
-    # orderable, hashable id type.
-    e = (
-        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-
-    start_round = 0
-    if resume and checkpointer is not None and checkpointer.latest() is not None:
-        start_round = checkpointer.latest()
-        e = checkpointer.load(spark, start_round)
-        prev_sig = (
-            checkpointer.load_metrics(start_round).get("sig_cnt"),
-            checkpointer.load_metrics(start_round).get("sig_hash"),
+    with SuperstepLoop(
+        edges.sparkSession, checkpointer, resume, partitions, max_rounds
+    ) as loop:
+        edges = loop.rebind(edges)
+        if nodes is not None:
+            nodes = loop.rebind(nodes)
+        # Ids keep their native type (numeric min for longs, lexicographic
+        # min for strings): long comparisons and shuffles are several times
+        # cheaper than strings at 10^9-vertex scale, and every step below
+        # only needs an orderable, hashable id type.
+        e = (
+            edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+            .filter(F.col("a") != F.col("b"))
+            .distinct()
         )
-    else:
-        e, prev_sig = _materialize_with_sig(e, 0, checkpointer)
-        if checkpointer is not None:
-            from bluegraph_spark.operators.pagerank import _update_metrics
-
-            _update_metrics(
-                checkpointer, 0, {"sig_cnt": prev_sig[0], "sig_hash": prev_sig[1]}
+        # The signature rides every materialization job as observed
+        # metrics, the initial one included: no extra pass over the edges.
+        loop.start(e, [_sig_hash()], _signature)
+        if not loop.done:
+            # Freeze the plan for the loop: the round plan is fixed-shape
+            # over a small known-size state, so AQE's per-stage driver
+            # re-planning is pure serial overhead, and the shuffle width
+            # should match the data, not the session default. (At sandbox
+            # scale the win is modest — ~16s -> ~11s for cc_orders at sf0.1,
+            # the floor being per-stage fixed costs — but at cluster scale a
+            # mis-sized width is the difference between 1 task wave and
+            # thousands of empty tasks.)
+            n_parts = loop.width(lambda: loop.last.get("sig_cnt"))
+            loop.freeze(n_parts)
+            loop.run(
+                lambda e, _: _cc_round(e, n_parts, loop.step_cache),
+                [_sig_hash()],
+                _signature,
             )
-
-    conf_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if partitions:
-        n_parts = int(partitions)
-    else:
-        # prev_sig[0] may be None on resume from a checkpoint whose metrics
-        # predate the signature record; fall back to the session width then.
-        cnt0 = prev_sig[0] if prev_sig[0] is not None else 0
-        n_parts = (
-            loop_partitions(int(cnt0), conf_parts)
-            if cnt0
-            else conf_parts
-        )
-
-    history: list[dict[str, Any]] = []
-    converged = False
-    rnd = start_round
-    # Freeze the plan for the loop: the round plan is fixed-shape over a
-    # small known-size state, so AQE's per-stage driver re-planning is
-    # pure serial overhead, and the shuffle width should match the data,
-    # not the session default. (At sandbox scale the win is modest —
-    # ~16s -> ~11s for cc_orders at sf0.1, the floor being per-stage
-    # fixed costs — but at cluster scale a mis-sized width is the
-    # difference between 1 task wave and thousands of empty tasks.)
-    # Both pins land on the loop's private session and die with it.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-    round_plan: str | None = None
-    round_exchanges: int | None = None
-    while rnd < max_rounds:
-        rnd += 1
-        t0 = time.time()
-        # Convergence signature rides the materialization job as observed
-        # metrics — no second pass over the edges.
-        e_round, caches = _cc_round(e, n_parts)
-        # try/finally: a job failure or checkpointer.save error mid-round
-        # must not leave the round's persisted working sets in the
-        # SparkContext-shared cache manager forever (the caller's other work
-        # would see the leaked executor memory).
-        try:
-            if round_plan is None:
-                from bluegraph_spark.plans.planinfo import executed_exchange_count
-
-                round_plan = e_round._jdf.queryExecution().executedPlan().toString()
-                round_exchanges = executed_exchange_count(e_round)
-            e_new, sig = _materialize_with_sig(e_round, rnd, checkpointer)
-        finally:
-            for c in caches:
-                c.unpersist()
-        history.append(
-            {
-                "round": rnd,
-                "superstep_sec": round(time.time() - t0, 3),
-                "edges": sig[0],
-                "hash": sig[1],
-            }
-        )
-        if checkpointer is not None:
-            from bluegraph_spark.operators.pagerank import _update_metrics
-
-            _update_metrics(
-                checkpointer, rnd, {"sig_cnt": sig[0], "sig_hash": sig[1]}
-            )
-        # e_new is materialized (the signature job ran): free the superseded
-        # round's checkpoint blocks now instead of waiting for periodic GC.
-        release_local_checkpoint(e)
-        e = e_new
-        if sig == prev_sig:
-            converged = True
-            break
-        prev_sig = sig
+        e = loop.state
 
     # stars: (a=child, b=root). Roots + isolated nodes label themselves.
     members = e.select(F.col("a").alias("id"), F.col("b").alias("component"))
@@ -297,5 +212,6 @@ def connected_components(
     # the non-converged (max_rounds hit) case
     comp = comp.groupBy("id").agg(F.min("component").alias("component"))
     return ComponentsResult(
-        rebind(comp, caller), rnd, converged, history, round_plan, round_exchanges
+        loop.output(comp), loop.iteration, loop.converged, loop.history,
+        loop.plan, loop.exchanges,
     )

@@ -161,39 +161,41 @@ def fastrp_embeddings(
     )
     if not directed:
         e0 = symmetrize_edges(e0)
-    e0 = e0.persist()
-    if partitions:
-        n_parts = int(partitions)
-    else:
-        n_parts = loop_partitions(e0.count(), conf_parts)
-    e = e0.repartition(n_parts, "src").persist()
-    e.count()
-    e0.unpersist()
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-
-    # The vertex set is read three+ times (the init projection and every
-    # iteration's zero-degree left join): materialize it once instead of
-    # re-running the union+distinct over the edge cache per consumer.
-    nodes = stats_safe_local_checkpoint(
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-
-    cur = stats_safe_local_checkpoint(
-        _l2_normalize(_init_embedding(nodes, dim, seed), quantize)
-    )
-    zeros = F.array(*[F.lit(0.0)] * dim)
+    e = nodes = None
     # Every iteration state stays checkpointed until the final weighted
     # fold is materialized (K is 2-4; V·d·K doubles is the same order as
     # the output itself), then all intermediates are released at once —
     # releasing a state mid-loop while the lazy fold still referenced it
     # is a checkpoint-block-not-found crash, not a cleanup.
-    states: list[DataFrame] = [cur]
+    states: list[DataFrame] = []
     iters: list[DataFrame] = []
-
     try:
+        e0 = e0.persist()
+        if partitions:
+            n_parts = int(partitions)
+        else:
+            n_parts = loop_partitions(e0.count(), conf_parts)
+        e = e0.repartition(n_parts, "src").persist()
+        e.count()
+        e0.unpersist()
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
+
+        # The vertex set is read three+ times (the init projection and every
+        # iteration's zero-degree left join): materialize it once instead of
+        # re-running the union+distinct over the edge cache per consumer.
+        nodes = stats_safe_local_checkpoint(
+            e.select(F.col("src").alias("id"))
+            .unionByName(e.select(F.col("dst").alias("id")))
+            .distinct()
+        )
+
+        cur = stats_safe_local_checkpoint(
+            _l2_normalize(_init_embedding(nodes, dim, seed), quantize)
+        )
+        zeros = F.array(*[F.lit(0.0)] * dim)
+        states.append(cur)
+
         for _ in iteration_weights:
             sums = (
                 e.join(cur.withColumnRenamed("id", "src"), "src")
@@ -240,11 +242,13 @@ def fastrp_embeddings(
                 )
             )
         out = stats_safe_local_checkpoint(folded)
-        for s in states:
-            release_local_checkpoint(s)
-        release_local_checkpoint(nodes)
     finally:
-        e.unpersist()
+        e0.unpersist()
+        if e is not None:
+            e.unpersist()
+        for st in states:
+            release_local_checkpoint(st)
+        release_local_checkpoint(nodes)
     return rebind(out, caller)
 
 

@@ -61,20 +61,16 @@ table geometrically, so level 2+ costs a fraction of level 1.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
-from pyspark.sql import Column, DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bluegraph_spark.pgframe import symmetrize_edges
 from bluegraph_spark.plans.checkpoint import SuperstepCheckpointer
-from bluegraph_spark.plans.isolation import loop_partitions, loop_session, rebind
-from bluegraph_spark.plans.stats_guard import (
-    release_local_checkpoint,
-    stats_safe_local_checkpoint,
-)
+from bluegraph_spark.plans.loop import SuperstepLoop
+from bluegraph_spark.plans.stats_guard import stats_safe_local_checkpoint
 
 
 @dataclass
@@ -92,6 +88,7 @@ def _default_parity(c: Column) -> Column:
 
 
 def _local_move_rounds(
+    loop: SuperstepLoop,
     sym: DataFrame,
     loops: DataFrame,
     labels: DataFrame,
@@ -99,22 +96,21 @@ def _local_move_rounds(
     parity_fn: Callable[[Column], Column],
     max_rounds: int,
     exact_rounds: int | None,
-    checkpointer: SuperstepCheckpointer | None,
-    cp_offset: int,
-    history: list[dict[str, Any]],
     level: int,
 ) -> tuple[DataFrame, int, bool]:
     """Run local-move rounds at one level; returns (labels, rounds, converged).
 
     ``sym``: symmetrized loop-free (src, dst, w) — persisted by the caller.
     ``loops``: (id, lw) self-loop weights (empty at level 1).
-    ``labels``: (id, c) current assignment, ``tm``: the scalar 2m.
+    ``labels``: (id, c) current assignment, ``tm``: the scalar 2m. Round r
+    of the level is checkpoint ``loop.iteration + r``: the numbering runs on
+    across levels.
     """
     # Weighted degree: k_i = Σ incident non-loop w + 2·loop_w (nx G.degree
     # convention). Loop terms are constant across a vertex's community
     # choices, so they cancel out of every gain comparison — they only
     # need to be IN k_i (and hence Σtot) consistently.
-    deg = (
+    deg = loop.cache(
         labels.select("id")
         .join(
             sym.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("_kd")),
@@ -126,19 +122,17 @@ def _local_move_rounds(
             "id",
             (F.coalesce("_kd", F.lit(0.0)) + F.coalesce("_kl", F.lit(0.0))).alias("k"),
         )
-        .persist()
     )
     deg.count()
 
+    first = loop.iteration
     rnd = 0
-    zero_streak = 0
-    converged = False
-    prev_cp: DataFrame | None = None
-    target_rounds = exact_rounds if exact_rounds is not None else max_rounds
-    while rnd < target_rounds:
+
+    def superstep(state: DataFrame, _last) -> DataFrame:
+        nonlocal rnd
         rnd += 1
-        t0 = time.time()
         par = (rnd - 1) % 2
+        labels = state.select("id", "c")
         # Per-round vertex state (id, c, k) — labels joined with the static
         # degree table once and reused by the community-degree aggregate
         # and the candidate c_own/k join (one fewer join per round than
@@ -215,57 +209,42 @@ def _local_move_rounds(
         moved = (
             parity_fn(F.col("id")) == F.lit(par)
         ) & (F.col("c_new") != F.col("c_own"))
-        new_labels = dec.select(
+        return dec.select(
             "id",
             F.when(moved, F.col("c_new")).otherwise(F.col("c_own")).alias("c"),
             F.when(moved, F.lit(True)).otherwise(F.lit(False)).alias("_moved"),
         )
-        t_build = time.time() - t0
-        obs = Observation(f"louvain_l{level}_r{rnd}_{time.time_ns()}")
-        new_labels = new_labels.observe(
-            obs,
-            F.sum(F.col("_moved").cast("long")).alias("moves"),
-            F.count(F.lit(1)).alias("rows"),
-        )
-        if checkpointer is not None:
-            new_labels = checkpointer.save(cp_offset + rnd, new_labels, {"pending": True})
-        else:
-            new_labels = stats_safe_local_checkpoint(new_labels)
-        t_ckpt = time.time() - t0 - t_build
-        m = obs.get
-        # The new checkpoint is materialized; free the previous in-loop
-        # checkpoint's blocks deterministically (the level's initial labels,
-        # created outside this loop, are never touched).
-        release_local_checkpoint(prev_cp)
-        prev_cp = new_labels
+
+    def record(m: dict[str, Any], last: dict[str, Any] | None) -> dict[str, Any]:
         moves = int(m["moves"] or 0)
-        rec = {
+        # a level ends when two consecutive rounds move nothing (every
+        # parity class had a final chance)
+        converged = (
+            exact_rounds is None
+            and moves == 0
+            and rnd > 1
+            and last["moves"] == 0
+        )
+        return {
             "level": level,
             "round": rnd,
-            "parity": par,
-            "superstep_sec": round(time.time() - t0, 3),
-            "build_sec": round(t_build, 3),
-            "ckpt_sec": round(t_ckpt, 3),
+            "parity": (rnd - 1) % 2,
             "moves": moves,
-            "rows": int(m["rows"]),
+            "converged": converged,
         }
-        history.append(rec)
-        if __debug__ and __import__("os").environ.get("BG_LOUVAIN_DEBUG"):
-            print(rec, flush=True)
-        if checkpointer is not None:
-            from bluegraph_spark.operators.pagerank import _update_metrics
 
-            _update_metrics(checkpointer, cp_offset + rnd, rec)
-        labels = new_labels.select("id", "c")
-        if exact_rounds is None:
-            zero_streak = zero_streak + 1 if moves == 0 else 0
-            if zero_streak >= 2:
-                converged = True
-                break
+    target_rounds = exact_rounds if exact_rounds is not None else max_rounds
+    loop.begin(labels)
+    loop.run(
+        superstep,
+        [F.sum(F.col("_moved").cast("long")).alias("moves")],
+        record,
+        until=first + target_rounds,
+    )
     deg.unpersist()
-    if exact_rounds is not None:
-        converged = True  # fixed-round mode: ran exactly as specified
-    return labels, rnd, converged
+    # fixed-round mode counts as converged: it ran exactly as specified
+    converged = exact_rounds is not None or (rnd > 0 and loop.converged)
+    return loop.state.select("id", "c"), rnd, converged
 
 
 def louvain(
@@ -293,64 +272,54 @@ def louvain(
     ``newSession()`` with AQE off and the shuffle width sized to the data;
     the caller's session conf is never touched.
     """
-    caller = edges.sparkSession
-    spark = loop_session(caller)
-    edges = rebind(edges, spark)
-    if nodes is not None:
-        nodes = rebind(nodes, spark)
     if parity_fn is None:
         parity_fn = _default_parity
-    w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
-    e0 = (
-        edges.select(F.col("src"), F.col("dst"), w.alias("w"))
-        .filter(F.col("src") != F.col("dst"))
-        .persist()
-    )
-    n_edges = e0.count()
-    conf_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # Sized off the undirected edge count (not the doubled symmetrized
-    # count): the round's window/argmax stages degrade past ~8 tasks at
-    # this state size — measured sweep at sf0.1 (245k edges): 2 parts
-    # 15.2-16.0s, 8 parts 14.8s, 16 parts 21.7s, 31 parts 23.3s.
-    n_parts = loop_partitions(n_edges, conf_parts)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
+    with SuperstepLoop(edges.sparkSession, checkpointer) as loop:
+        edges = loop.rebind(edges)
+        if nodes is not None:
+            nodes = loop.rebind(nodes)
+        w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
+        e0 = loop.cache(
+            edges.select(F.col("src"), F.col("dst"), w.alias("w"))
+            .filter(F.col("src") != F.col("dst"))
+        )
+        # Sized off the undirected edge count (not the doubled symmetrized
+        # count): the round's window/argmax stages degrade past ~8 tasks at
+        # this state size — measured sweep at sf0.1 (245k edges): 2 parts
+        # 15.2-16.0s, 8 parts 14.8s, 16 parts 21.7s, 31 parts 23.3s.
+        n_parts = loop.width(e0.count)
+        loop.freeze(n_parts)
 
-    sym = (
-        symmetrize_edges(e0)
-        .repartition(n_parts, "dst")
-        .sortWithinPartitions("dst")
-        .persist()
-    )
-    sym.count()
-    # 2m rides the plan as a broadcast 1-row scalar (m = Σ undirected w;
-    # the symmetrized table counts each edge twice, so Σ sym / 2 = m and
-    # tm = 2m = Σ sym). Loops (level ≥ 2) add 2·lw each.
-    if nodes is None:
-        vertices = sym.select(F.col("src").alias("id")).distinct()
-    else:
-        id_type = dict(e0.dtypes).get("src", "string")
-        first = nodes.columns[0]
-        vertices = (
-            nodes.select("id") if first == "id" and dict(nodes.dtypes)[first] == id_type
-            else nodes.select(F.col(first).cast(id_type).alias("id"))
-        ).distinct()
+        sym = loop.cache(
+            symmetrize_edges(e0)
+            .repartition(n_parts, "dst")
+            .sortWithinPartitions("dst")
+        )
+        sym.count()
+        if nodes is None:
+            vertices = sym.select(F.col("src").alias("id")).distinct()
+        else:
+            id_type = dict(e0.dtypes).get("src", "string")
+            first = nodes.columns[0]
+            vertices = (
+                nodes.select("id")
+                if first == "id" and dict(nodes.dtypes)[first] == id_type
+                else nodes.select(F.col(first).cast(id_type).alias("id"))
+            ).distinct()
 
-    labels = stats_safe_local_checkpoint(
-        vertices.select("id", F.col("id").alias("c"))
-    )
-    # level-1 graphs are loop-free (filtered above); loops appear at level 2+
-    loops = labels.select("id", F.lit(0.0).alias("lw")).limit(0)
-
-    history: list[dict[str, Any]] = []
-    total_rounds = 0
-    levels_run = 0
-    converged = False
-    # Composed original-id -> community mapping across levels.
-    assignment = labels
-    cur_sym, cur_loops = sym, loops
-    caches = [e0, sym]
-    try:
+        # Composed original-id -> community mapping across levels. The
+        # initial singleton labels are the loop's until round 1 supersedes
+        # them.
+        assignment = stats_safe_local_checkpoint(
+            vertices.select("id", F.col("id").alias("c"))
+        )
+        # level-1 graphs are loop-free (filtered above); loops appear at
+        # level 2+
+        cur_sym = sym
+        cur_loops = vertices.select("id", F.lit(0.0).alias("lw")).limit(0)
+        total_rounds = 0
+        levels_run = 0
+        converged = False
         for level in range(1, max_levels + 1):
             levels_run = level
             # 2m is loop-invariant within a level; as a broadcast 1-row
@@ -358,6 +327,8 @@ def louvain(
             # by EVERY round's decision query (a BroadcastExchange submits
             # its own collect job). One scalar collect per level instead;
             # F.lit reproduces the identical double in the gain expression.
+            # (m = Σ undirected w; the symmetrized table counts each edge
+            # twice, so tm = 2m = Σ sym; loops at level ≥ 2 add 2·lw each.)
             tm_row = (
                 cur_sym.agg(F.sum("w").alias("_s"))
                 .crossJoin(cur_loops.agg(F.coalesce(F.sum("lw"), F.lit(0.0)).alias("_l")))
@@ -371,20 +342,11 @@ def louvain(
                 assignment.select(F.col("c").alias("id")).distinct()
                 .select("id", F.col("id").alias("c"))
                 if level > 1
-                else labels
+                else assignment
             )
             lab, rounds, conv = _local_move_rounds(
-                cur_sym,
-                cur_loops,
-                lab0,
-                tm,
-                parity_fn,
-                max_rounds,
-                exact_rounds,
-                checkpointer,
-                total_rounds,
-                history,
-                level,
+                loop, cur_sym, cur_loops, lab0, tm, parity_fn, max_rounds,
+                exact_rounds, level,
             )
             total_rounds += rounds
             converged = conv
@@ -408,11 +370,10 @@ def louvain(
                 .join(lab.select(F.col("id").alias("dst"), F.col("c").alias("cd")), "dst")
                 .select("cs", "cd", "w")
             )
-            new_sym = (
+            new_sym = loop.cache(
                 mapped.filter(F.col("cs") != F.col("cd"))
                 .groupBy(F.col("cs").alias("src"), F.col("cd").alias("dst"))
                 .agg(F.sum("w").alias("w"))
-                .persist()
             )
             # intra weight: mapped counts each undirected edge twice
             old_loops_mapped = cur_loops.join(
@@ -430,15 +391,11 @@ def louvain(
             n_coarse_edges = new_sym.count()
             if cur_sym is not sym:
                 cur_sym.unpersist()
-            caches.append(new_sym)
             cur_sym, cur_loops = new_sym, new_loops
             if n_coarse_edges == 0:
                 break
-    finally:
-        for c in caches:
-            c.unpersist()
 
     out = assignment.select("id", F.col("c").alias("community"))
     return LouvainResult(
-        rebind(out, caller), levels_run, total_rounds, converged, None, history
+        loop.output(out), levels_run, total_rounds, converged, None, loop.history
     )

@@ -114,8 +114,8 @@ def minimum_spanning_forest(
     # dead the moment their successor materializes — free them then rather
     # than waiting for a periodic-GC ContextCleaner pass. The sel
     # checkpoints are NOT released (the forest output reads them lazily),
-    # and the initial rem checkpoint survives for the empty-forest path.
-    prev_rem: DataFrame | None = None
+    # and rem survives the loop only for the empty-forest path.
+    prev_rem = rem
     # rem holds ONLY cross-component edges with current labels (invariant:
     # cu != cv on every row — round 1 starts from singleton components
     # cu = u, cv = v on the self-loop-free canon table; each relabel job
@@ -258,6 +258,7 @@ def minimum_spanning_forest(
         )
 
     if forest_parts:
+        release_local_checkpoint(rem)
         out = forest_parts[0]
         for p in forest_parts[1:]:
             out = out.unionByName(p)

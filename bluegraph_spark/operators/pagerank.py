@@ -29,20 +29,15 @@ Scale design:
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bluegraph_spark.pgframe import symmetrize_edges
 from bluegraph_spark.plans.checkpoint import SuperstepCheckpointer
-from bluegraph_spark.plans.isolation import loop_partitions, loop_session, rebind
-from bluegraph_spark.plans.stats_guard import (
-    release_local_checkpoint,
-    stats_safe_local_checkpoint,
-)
+from bluegraph_spark.plans.loop import SuperstepLoop
 
 
 @dataclass
@@ -88,175 +83,132 @@ def pagerank(
     concurrently on it from other driver threads see their own settings
     throughout.
     """
-    caller = edges.sparkSession
-    spark = loop_session(caller)
-    edges = rebind(edges, spark)
-    if nodes is not None:
-        nodes = rebind(nodes, spark)
-    src, dst = "src", "dst"
-    w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
-    # Ids keep their native type: joins/sorts on longs are several times
-    # cheaper than on strings at 10^9-vertex scale; callers with string ids
-    # (e.g. co-occurrence graphs) pass string columns through unchanged.
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"), w.alias("w"))
-    if not directed:
-        e = symmetrize_edges(e)
-
-    conf_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    # The raw edge expression may itself be expensive (e.g. a co-occurrence
-    # self-join); cache it so sizing, out-weights, and the normalized table
-    # cost exactly ONE pass over the source, then drop it once the derived
-    # caches are materialized.
-    e = e.persist()
-
-    # Out-weight normalization (NetworkX stochastic_graph): w_uv / Σ_v w_uv.
-    # ``out`` is persisted because three consumers read it (norm, the
-    # dangling flags, and — on superstep 1 — the state recompute).
-    out = e.groupBy("src").agg(
-        F.sum("w").alias("out_w"), F.count("*").alias("_deg")
-    ).persist()
-
-    if nodes is not None:
-        # No same-name self-alias: the optimizer strips Alias(id AS id) and
-        # rewrites references to the child attribute, which strands the
-        # partitioning a later localCheckpoint captures on an attribute id
-        # absent from the logical output — measured as two avoidable O(V)
-        # state shuffles per superstep.
-        first = nodes.columns[0]
-        vertices = (
-            nodes.select("id") if first == "id"
-            else nodes.select(F.col(first).alias("id"))
-        ).distinct()
-    elif not directed:
-        # Symmetrized graph: every vertex appears as a src, so the (cached,
-        # already-distinct) out-weight table IS the vertex set — no separate
-        # union+distinct pass over the edges.
-        vertices = out.select(F.col("src").alias("id"))
-    else:
-        vertices = (
-            e.select(F.col("src").alias("id"))
-            .unionByName(e.select(F.col("dst").alias("id")))
-            .distinct()
+    with SuperstepLoop(
+        edges.sparkSession, checkpointer, resume, partitions, max_iter
+    ) as loop:
+        if loop.done:
+            return _result(loop)
+        edges = loop.rebind(edges)
+        if nodes is not None:
+            nodes = loop.rebind(nodes)
+        w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
+        # Ids keep their native type: joins/sorts on longs are several times
+        # cheaper than on strings at 10^9-vertex scale; callers with string
+        # ids (e.g. co-occurrence graphs) pass string columns through.
+        e = edges.select(
+            F.col("src").alias("src"), F.col("dst").alias("dst"), w.alias("w")
         )
-    # Size the superstep partitioning from the measured edge count: 32 task
-    # waves over a 2k-vertex graph cost more in scheduling than the work
-    # itself, while a 30M-edge graph needs every core. On the common
-    # undirected default path the vertex set IS the out-weight table, so
-    # one aggregation job yields both the edge count and N (saving the
-    # separate vertices.count() job below).
-    N = None
-    if partitions:
-        n_parts = int(partitions)
-        if nodes is None and not directed:
-            N = out.count()
-    elif nodes is None and not directed:
-        row = out.agg(
-            F.count(F.lit(1)).alias("_n"), F.sum("_deg").alias("_m")
-        ).collect()[0]
-        N = int(row["_n"] or 0)
-        n_parts = loop_partitions(int(row["_m"] or 0), conf_parts)
-    else:
-        n_edges_directed = out.agg(F.sum("_deg")).collect()[0][0] or 0
-        n_parts = loop_partitions(int(n_edges_directed), conf_parts)
-    # CSR-blocked layout (north rule): hash-partitioned by src AND sorted
-    # within partitions. InMemoryTableScan reports the cached plan's
-    # partitioning + ordering, so every superstep's sort-merge join with the
-    # rank state reuses both — no exchange and no re-sort of the big side.
-    norm = (
-        e.join(out.filter(F.col("out_w") > 0), "src")
-        .select("src", "dst", (F.col("w") / F.col("out_w")).alias("p"))
-        .repartition(n_parts, "src")
-        .sortWithinPartitions("src")
-        .persist()
-    )
-    # Dangling = no out-edges or zero out-weight sum.
-    has_out = out.filter(F.col("out_w") > 0).select(F.col("src").alias("id"),
-                                                    F.lit(False).alias("dangling"))
-    vstate0 = vertices.join(has_out, "id", "left").select(
-        "id", F.coalesce("dangling", F.lit(True)).alias("dangling")
-    )
+        if not directed:
+            e = symmetrize_edges(e)
 
-    if N is None:
-        N = vertices.count()
-    if N == 0:
-        e.unpersist()
-        out.unpersist()
-        norm.unpersist()
-        # empty result keeps the caller's id type (vertices schema), not a
-        # hardcoded string — unioning/joining against pagerank output must
-        # see one consistent type contract whether or not the graph is empty
-        empty = vertices.withColumn("rank", F.lit(0.0)).select("id", "rank")
-        return PageRankResult(rebind(empty, caller), 0, True, 0.0)
+        # The raw edge expression may itself be expensive (e.g. a
+        # co-occurrence self-join); cache it so sizing, out-weights, and the
+        # normalized table cost exactly ONE pass over the source, then drop
+        # it once the derived caches are materialized.
+        e = loop.cache(e)
 
-    # Materialize the edge cache under AQE, then freeze the plan BEFORE the
-    # initial state materializes: a localCheckpoint taken while AQE is on
-    # captures UnknownPartitioning (the adaptive plan only knows its final
-    # layout after execution), which silently costs two extra O(V) state
-    # shuffles on the first superstep (measured: 3 exchanges instead of 1).
-    # Inside the loop every superstep re-runs the same fixed-shape plan over
-    # explicitly partitioned inputs, and AQE's per-stage driver re-planning
-    # is pure serial overhead there (measured at seconds per superstep). The
-    # conf pins land on the loop's own session only (see ``loop_session``).
-    norm.count()
-    e.unpersist()
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    # Align every loop exchange (the message groupBy) with the norm
-    # partitioning so the superstep joins stay exchange-free at the chosen
-    # width.
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
+        # Out-weight normalization (NetworkX stochastic_graph): w_uv / Σ_v
+        # w_uv. ``out`` is persisted because three consumers read it (norm,
+        # the dangling flags, and — on superstep 1 — the state recompute).
+        out = loop.cache(
+            e.groupBy("src").agg(F.sum("w").alias("out_w"), F.count("*").alias("_deg"))
+        )
 
-    history: list[dict[str, Any]] = []
-    start_iter = 0
-    state = None
-    if resume and checkpointer is not None and checkpointer.latest() is not None:
-        start_iter = checkpointer.latest()
-        state = checkpointer.load(spark, start_iter)
-        last = checkpointer.load_metrics(start_iter)
-        danglesum = last["danglesum"]
-        err = last.get("err", float("inf"))
-        if last.get("converged"):
-            e.unpersist()
-            out.unpersist()
-            norm.unpersist()
-            return PageRankResult(
-                rebind(state.select("id", "rank"), caller),
-                start_iter, True, err, checkpointer.metrics_log(),
+        if nodes is not None:
+            # No same-name self-alias: the optimizer strips Alias(id AS id)
+            # and rewrites references to the child attribute, which strands
+            # the partitioning a later localCheckpoint captures on an
+            # attribute id absent from the logical output — measured as two
+            # avoidable O(V) state shuffles per superstep.
+            first = nodes.columns[0]
+            vertices = (
+                nodes.select("id") if first == "id"
+                else nodes.select(F.col(first).alias("id"))
+            ).distinct()
+        elif not directed:
+            # Symmetrized graph: every vertex appears as a src, so the
+            # (cached, already-distinct) out-weight table IS the vertex set
+            # — no separate union+distinct pass over the edges.
+            vertices = out.select(F.col("src").alias("id"))
+        else:
+            vertices = (
+                e.select(F.col("src").alias("id"))
+                .unionByName(e.select(F.col("dst").alias("id")))
+                .distinct()
             )
-    else:
+        # Size the superstep partitioning from the measured edge count: 32
+        # task waves over a 2k-vertex graph cost more in scheduling than the
+        # work itself, while a 30M-edge graph needs every core. On the
+        # common undirected default path the vertex set IS the out-weight
+        # table, so one aggregation job yields both the edge count and N
+        # (saving the separate vertices.count() job below).
+        if nodes is None and not directed:
+            row = out.agg(
+                F.count(F.lit(1)).alias("_n"), F.sum("_deg").alias("_m")
+            ).collect()[0]
+            N = int(row["_n"] or 0)
+            n_parts = loop.width(lambda: row["_m"])
+        else:
+            N = None
+            n_parts = loop.width(lambda: out.agg(F.sum("_deg")).collect()[0][0])
+        # CSR-blocked layout (north rule): hash-partitioned by src AND
+        # sorted within partitions. InMemoryTableScan reports the cached
+        # plan's partitioning + ordering, so every superstep's sort-merge
+        # join with the rank state reuses both — no exchange and no re-sort
+        # of the big side.
+        norm = loop.cache(
+            e.join(out.filter(F.col("out_w") > 0), "src")
+            .select("src", "dst", (F.col("w") / F.col("out_w")).alias("p"))
+            .repartition(n_parts, "src")
+            .sortWithinPartitions("src")
+        )
+        # Dangling = no out-edges or zero out-weight sum.
+        has_out = out.filter(F.col("out_w") > 0).select(
+            F.col("src").alias("id"), F.lit(False).alias("dangling")
+        )
+        vstate0 = vertices.join(has_out, "id", "left").select(
+            "id", F.coalesce("dangling", F.lit(True)).alias("dangling")
+        )
+
+        if N is None:
+            N = vertices.count()
+        if N == 0:
+            # empty result keeps the caller's id type (vertices schema), not
+            # a hardcoded string — unioning/joining against pagerank output
+            # must see one consistent type contract whether or not the graph
+            # is empty
+            empty = vertices.withColumn("rank", F.lit(0.0)).select("id", "rank")
+            return PageRankResult(loop.output(empty), 0, True, 0.0)
+
+        # Materialize the edge cache under AQE, then freeze the plan BEFORE
+        # the initial state materializes (see ``SuperstepLoop.freeze``).
+        # Inside the loop every superstep re-runs the same fixed-shape plan
+        # over explicitly partitioned inputs, and AQE's per-stage driver
+        # re-planning is pure serial overhead there (measured at seconds per
+        # superstep). The width pin aligns every loop exchange (the message
+        # groupBy) with the norm partitioning so the superstep joins stay
+        # exchange-free.
+        norm.count()
+        e.unpersist()
+        loop.freeze(n_parts)
+
+        # The dangling sum rides every state materialization as an observed
+        # metric — no separate aggregation pass.
+        dsum = F.sum(F.when(F.col("dangling"), F.col("rank")).otherwise(0.0))
         # Pin the initial state's layout to (id-hash, n_parts) so superstep
-        # 1's joins are already exchange-free (AQE may otherwise coalesce
-        # vstate0 to a different partition count).
-        state = (
+        # 1's joins are already exchange-free.
+        loop.start(
             vstate0.withColumn("rank", F.lit(1.0 / N))
             .withColumn("delta", F.lit(0.0))
-            .repartition(n_parts, "id")
+            .repartition(n_parts, "id"),
+            [dsum.alias("dsum")],
+            lambda m, _: {
+                "err": None, "danglesum": float(m["dsum"] or 0.0), "converged": False
+            },
         )
-        # The uniform start's dangling sum rides the state materialization
-        # job as an observed metric — no separate aggregation pass.
-        obs0 = Observation(f"pagerank_init_{time.time_ns()}")
-        state = state.observe(
-            obs0,
-            F.sum(F.when(F.col("dangling"), F.col("rank")).otherwise(0.0)).alias(
-                "dsum"
-            ),
-        )
-        if checkpointer is not None:
-            state = checkpointer.save(0, state, {"danglesum": None, "err": None})
-        else:
-            state = stats_safe_local_checkpoint(state)
-        danglesum = float(obs0.get["dsum"] or 0.0)
 
-    converged = False
-    err = float("inf")
-    it = start_iter
-    superstep_plan: str | None = None
-    superstep_exchanges: int | None = None
-    try:
-        while it < max_iter:
-            it += 1
-            _t0 = time.time()
-            base = (1.0 - alpha) / N + alpha * danglesum / N
+        def superstep(state: DataFrame, last: dict[str, Any]) -> DataFrame:
+            base = (1.0 - alpha) / N + alpha * last["danglesum"] / N
             # One exchange per superstep: the message shuffle inside the
             # groupBy. Both the norm join (cached side pre-partitioned and
             # pre-sorted on src) and the rank-update left join (contribs and
@@ -271,7 +223,7 @@ def pagerank(
                 .agg(F.sum(F.col("p") * F.col("rank")).alias("c"))
             )
             new_rank = F.lit(alpha) * F.coalesce("c", F.lit(0.0)) + F.lit(base)
-            new_state = (
+            return (
                 state.select("id", "dangling", F.col("rank").alias("prev"))
                 .join(contribs, "id", "left")
                 .select(
@@ -282,72 +234,27 @@ def pagerank(
                 )
             )
 
-            # L1 error + next dangling sum ride the materialization job as
-            # observed metrics — no second pass over the state.
-            obs = Observation(f"pagerank_iter_{it}")
-            new_state = new_state.observe(
-                obs,
-                F.sum("delta").alias("err"),
-                F.sum(F.when(F.col("dangling"), F.col("rank")).otherwise(0.0)).alias(
-                    "dsum"
-                ),
-                F.count(F.lit(1)).alias("rows"),
-            )
-            if superstep_plan is None:
-                # snapshot the static physical plan (AQE is off in-loop, so
-                # this is exactly what executes) for the plan-guard test
-                from bluegraph_spark.plans.planinfo import executed_exchange_count
-
-                superstep_plan = (
-                    new_state._jdf.queryExecution().executedPlan().toString()
-                )
-                superstep_exchanges = executed_exchange_count(new_state)
-            if checkpointer is not None:
-                new_state = checkpointer.save(it, new_state, {"pending": True})
-            else:
-                new_state = stats_safe_local_checkpoint(new_state)
-
-            m = obs.get
+        def record(m: dict[str, Any], _last) -> dict[str, Any]:
             err = float(m["err"] or 0.0)
-            danglesum = float(m["dsum"] or 0.0)
-            converged = err < N * tol
-            rec = {
-                "iteration": it,
-                "superstep_sec": round(time.time() - _t0, 3),
+            return {
                 "err": err,
-                "danglesum": danglesum,
-                "rows": int(m["rows"]),
-                "converged": converged,
+                "danglesum": float(m["dsum"] or 0.0),
+                "converged": err < N * tol,
             }
-            history.append(rec)
-            if checkpointer is not None:
-                # overwrite the pending metrics with the full record
-                _update_metrics(checkpointer, it, rec)
-            # The successor is materialized (obs.get returned ⇒ the
-            # checkpoint job finished): free the superseded state's blocks
-            # now instead of waiting for a periodic full GC to reclaim them.
-            release_local_checkpoint(state)
-            state = new_state
-            if converged:
-                break
-    finally:
-        norm.unpersist()
-        out.unpersist()
 
+        # L1 error + next dangling sum ride the materialization job.
+        loop.run(superstep, [F.sum("delta").alias("err"), dsum.alias("dsum")], record)
+        return _result(loop)
+
+
+def _result(loop: SuperstepLoop) -> PageRankResult:
+    err = loop.last.get("err")
     return PageRankResult(
-        rebind(state.select("id", "rank"), caller), it, converged, err, history,
-        superstep_plan, superstep_exchanges,
+        loop.output(loop.state.select("id", "rank")),
+        loop.iteration,
+        loop.converged,
+        float("inf") if err is None else err,
+        loop.history,
+        loop.plan,
+        loop.exchanges,
     )
-
-
-def _update_metrics(cp: SuperstepCheckpointer, iteration: int, extra: dict) -> None:
-    import json
-    import os
-
-    rec = cp.load_metrics(iteration)
-    rec.pop("pending", None)
-    rec.update(extra)
-    tmp = cp.metrics_path(iteration) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(rec, f)
-    os.replace(tmp, cp.metrics_path(iteration))

@@ -1,7 +1,8 @@
 """Per-superstep vertex-state checkpointing with lineage + metrics + resume.
 
-Every iterative operator in this engine (PageRank, connected components,
-LPA) materializes its vertex state each superstep through this class:
+Every checkpointing superstep loop in this engine (``plans/loop.py``:
+PageRank, connected components, LPA, Louvain, SSSP, k-shortest distances)
+materializes its vertex state each superstep through this class:
 
 1. it cuts lineage — without it the logical plan grows by two joins per
    iteration and the job eventually dies in the planner (SURVEY.md §4.1);
@@ -9,6 +10,14 @@ LPA) materializes its vertex state each superstep through this class:
    from the last complete iteration (north rule);
 3. it records per-iteration metrics and per-partition lineage rows (row
    counts per written partition) so progress is observable.
+
+Metrics are written once per iteration, after the state write commits.
+``save`` takes them as a dict or as a zero-argument callable returning one;
+the callable is evaluated only once the data write (and the lineage job)
+has finished, so metrics observed on the write job itself
+(``DataFrame.observe``) are ready by then and land in the one JSON write.
+The metrics JSON is the completeness marker, so there is never a complete
+checkpoint whose metrics are still to come.
 
 The reference has no analogue (NetworkX/graph-tool iterate in-process); this
 is engine-side driver code, not a Catalyst extension.
@@ -43,7 +52,7 @@ import json
 import os
 import shutil
 import time
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -78,12 +87,13 @@ class SuperstepCheckpointer:
         self,
         iteration: int,
         state: DataFrame,
-        metrics: dict[str, Any] | None = None,
+        metrics: dict[str, Any] | Callable[[], dict[str, Any]] | None = None,
     ) -> DataFrame:
         """Write vertex state + metrics; return the re-read (lineage-free) DF.
 
         The returned DataFrame reads from storage, so downstream supersteps
         build plans on a fresh scan instead of the whole iteration history.
+        A callable ``metrics`` is evaluated after the state write commits.
         """
         path = self.data_path(iteration)
         t0 = time.time()
@@ -98,8 +108,6 @@ class SuperstepCheckpointer:
             "write_sec": round(write_sec, 4),
             "path": path,
         }
-        if metrics:
-            record.update(metrics)
         if self.collect_lineage:
             lineage = (
                 reread.groupBy(F.spark_partition_id().alias("partition"))
@@ -111,6 +119,10 @@ class SuperstepCheckpointer:
                 {"partition": r["partition"], "rows": r["rows"]} for r in lineage
             ]
             record["total_rows"] = int(sum(r["rows"] for r in lineage))
+        if callable(metrics):
+            metrics = metrics()
+        if metrics:
+            record.update(metrics)
         tmp = self.metrics_path(iteration) + ".tmp"
         with open(tmp, "w") as f:
             json.dump(record, f)

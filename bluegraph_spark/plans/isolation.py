@@ -87,21 +87,10 @@ def loop_session(caller: SparkSession) -> SparkSession:
 def _of_rows(df: DataFrame, target: SparkSession) -> DataFrame:
     """Primary rebind route: a Dataset over the SAME analyzed plan.
 
-    ``Dataset.ofRows`` moved namespaces in Spark 4
-    (``org.apache.spark.sql.classic.Dataset``); on 3.x it lives at
-    ``org.apache.spark.sql.Dataset``. Version-gated instead of blind-try:
-    on 3.5 the classic path would raise on EVERY rebind and silently drop
-    to the view fallback, whose re-aliasing strands checkpoint-captured
-    partitioning (+2 exchanges per superstep — the plan-guard tests would
-    fail without explaining why).
+    ``Dataset.ofRows`` lives in ``org.apache.spark.sql.classic`` since
+    Spark 4 (the ``pyspark>=4.0`` floor).
     """
-    major = int(target.version.split(".")[0])
-    dataset_cls = (
-        target._jvm.org.apache.spark.sql.classic.Dataset
-        if major >= 4
-        else target._jvm.org.apache.spark.sql.Dataset
-    )
-    jdf = dataset_cls.ofRows(
+    jdf = target._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
         target._jsparkSession, df._jdf.queryExecution().analyzed()
     )
     return DataFrame(jdf, target)

@@ -5,13 +5,14 @@ row-count, schema (sorted column names), and order-insensitive values.
 Usage: python scripts/check_parity.py [sf_dir] [query ...]
 """
 
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from bluegraph_spark.session import get_session
@@ -30,7 +31,7 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_session(master="local[8]", shuffle_partitions=16)
+    spark = get_session(master=f"local[{len(os.sched_getaffinity(0))}]", shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:
