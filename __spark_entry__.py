@@ -43,14 +43,7 @@ def _part_occ(spark, sf_dir):
 def _part_edges(spark, sf_dir, statistics=("frequency",)):
     from bluegraph_spark.operators.cooccurrence import cooccurrence_edges
 
-    # parts graph: ~4 nodes per factor (lineitems per order) — the sparse-
-    # factor regime where the adjacency-array pair strategy wins (the
-    # supplier graph, ~30 nodes per factor, keeps the default join).
-    return cooccurrence_edges(
-        _part_occ(spark, sf_dir),
-        statistics=list(statistics),
-        pair_strategy="array",
-    )
+    return cooccurrence_edges(_part_occ(spark, sf_dir), statistics=list(statistics))
 
 
 def _supplier_edges(spark, sf_dir):
@@ -193,9 +186,7 @@ def q_cooc_top_parts(spark, sf_dir):
     )
 
     occ = keep_top_n_nodes(_part_occ(spark, sf_dir), 500)
-    return cooccurrence_edges(
-        occ, statistics=["frequency"], pair_strategy="array"
-    ).select(
+    return cooccurrence_edges(occ, statistics=["frequency"]).select(
         "src", "dst", F.col("frequency").cast("long").alias("frequency")
     )
 

@@ -112,7 +112,6 @@ def cmd_cooc(args) -> dict:
         statistics=args.statistics.split(","),
         factor_freq_cap=args.factor_freq_cap,
         min_frequency=args.min_frequency,
-        salt=args.salt,
     )
     _write(edges, args)
     return {"edges": args.output}
@@ -360,7 +359,6 @@ def cmd_pipeline(args) -> dict:
         occ,
         statistics=["frequency", "npmi"],
         factor_freq_cap=args.factor_freq_cap,
-        salt=args.salt,
         prune_zero_mi="npmi",
     )
     edges.write.mode("overwrite").format(args.fmt).save(f"{args.output}/edges")
@@ -409,7 +407,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--statistics", default="frequency,ppmi,npmi")
     p.add_argument("--factor-freq-cap", type=int, default=None)
     p.add_argument("--min-frequency", type=int, default=None)
-    p.add_argument("--salt", type=int, default=None)
     p.add_argument("--top-n-nodes", type=int, default=None,
                    help="keep only the n most frequent nodes before edge "
                         "generation (the reference's primary scale knob)")
@@ -527,7 +524,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--corpus", required=True)
     p.add_argument("--pandas-udf", action="store_true")
     p.add_argument("--factor-freq-cap", type=int, default=None)
-    p.add_argument("--salt", type=int, default=None)
     p.add_argument("--top-n-nodes", type=int, default=None)
     p.add_argument("--checkpoint-dir", default=None)
     p.add_argument("--run-id", default="run")

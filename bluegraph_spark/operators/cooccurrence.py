@@ -14,17 +14,24 @@ factors and statistics frequency / PPMI / NPMI
 
 The reference scans all n(n-1)/2 pairs with a multiprocessing pool
 (generators.py:272-328). Spark-first replacement: represent occurrences as a
-long table ``(node, factor)`` and compute co-occurrence as a **self-equi-join
-on factor** followed by a pair aggregation — the shuffle and AQE replace the
-worker pool, and only genuinely co-occurring pairs are ever materialized.
+long table ``(node, factor)``, aggregate it once per factor into a sorted
+node list, and emit each factor's node pairs followed by a pair aggregation
+— the shuffle and AQE replace the worker pool, and only genuinely
+co-occurring pairs are ever materialized.
 
 Scale notes (100 TB design):
-- A factor occurring in f files yields f(f-1)/2 join rows: the classic skew
-  site. Mitigations, all explicit knobs: ``factor_freq_cap`` (drop factors
-  above a document-frequency cap — semantically the reference's
-  min-occurrence / top-n vocabulary pruning, cord19kg/utils.py:618-651),
-  AQE skew-join (on by default in the session), and ``salt`` (split each
-  heavy factor group across S salted sub-joins; result-identical, tested).
+- A factor with f nodes yields f(f-1)/2 pairs: the classic skew site. The
+  per-factor aggregation measures f, and each factor is treated by its own
+  size, with no caller knob. A factor of at most ``HOT_FACTOR_NODES`` nodes
+  emits its pairs in place, in the task that aggregated it. A hotter factor
+  is cut into ``k = ceil(f / HOT_FACTOR_NODES)`` chunks of its sorted node
+  list, and its k(k+1)/2 chunk-pair blocks spread over the shuffle width, so
+  a hub slows its job down without stalling it in one task (SURVEY §4:
+  salt only the hot keys).
+- ``factor_freq_cap`` drops factors above a document-frequency cap —
+  semantically the reference's min-occurrence / top-n vocabulary pruning,
+  cord19kg/utils.py:618-651. A cap at or below ``HOT_FACTOR_NODES`` leaves
+  the hot-factor branch out of the plan.
 - ``common_factors`` materializes the intersection sets and is opt-in only:
   shuffling per-pair factor arrays at 10^12-file scale is prohibitive
   (SURVEY.md §7.5).
@@ -32,7 +39,7 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
-from typing import Iterable, Sequence
+from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -42,9 +49,9 @@ from bluegraph_spark.plans.planinfo import plan_has_python_stage
 
 STATISTICS = ("frequency", "ppmi", "npmi", "expected", "pmi2", "pmi3")
 
-# Above this per-factor occurrence count, the salted path (when salt is set)
-# takes over; below it, the plain self-join is strictly cheaper.
-DEFAULT_SALT_THRESHOLD = 10_000
+# Factors with more distinct nodes than this are hot: their pairs are built
+# in chunk-pair blocks spread across tasks instead of inside one task.
+HOT_FACTOR_NODES = 1024
 
 
 def occurrences_from_node_property(
@@ -156,100 +163,88 @@ def keep_top_n_nodes(
     return occ.join(top, "node", "left_semi")
 
 
-def _array_pairs(occ: DataFrame) -> DataFrame:
-    """(s, t, factor) with s < t via per-factor adjacency arrays.
+def _factor_groups(occ: DataFrame) -> DataFrame:
+    """One row per factor: ``_ns`` its sorted distinct nodes, ``_fc`` its size.
 
-    One aggregation (``collect_set`` dedups duplicate occurrence rows, so
-    no separate ``distinct`` shuffle is needed) and a codegen'd nested
-    ``transform`` emit each factor's node pairs in place — one exchange of
-    the occurrence table instead of the self-join's distinct + two join
-    exchanges + sort-merge sorts. ``array_sort`` is the same lexicographic
-    (string) order as the join's ``a.node < b.node`` predicate, so the pair
-    multiset is identical. Skew caveat: a factor with f nodes emits its
-    f(f-1)/2 pairs inside ONE task, so unbounded hot factors need
-    ``factor_freq_cap`` (drop) or ``salt`` (which routes heavy factors
-    through the AQE-splittable salted join below) — the same two knobs the
-    self-join form documented, since 10^10-pair factors are infeasible on
-    any path.
+    ``collect_set`` deduplicates repeated occurrence rows, so no separate
+    ``distinct`` runs. ``_fc`` counts a NULL node too (``collect_set`` skips
+    it), as the cap always has. The NULL factor is a group of its own: it
+    counts toward its nodes' marginals but never pairs them.
     """
-    grouped = occ.groupBy("factor").agg(
-        F.array_sort(F.collect_set("node")).alias("_ns")
+    return occ.select(
+        F.col("node").cast("string").alias("node"),
+        F.col("factor").cast("string").alias("factor"),
+    ).groupBy("factor").agg(
+        F.array_sort(F.collect_set("node")).alias("_ns"),
+        (
+            F.size(F.collect_set("node"))
+            + F.max(F.col("node").isNull()).cast("int")
+        ).alias("_fc"),
     )
-    return grouped.select(
-        "factor",
-        F.explode(
-            F.flatten(
-                F.transform(
-                    "_ns",
-                    lambda x, i: F.transform(
-                        F.slice("_ns", i + 2, F.size("_ns")),
-                        lambda y: F.struct(x.alias("s"), y.alias("t")),
-                    ),
-                )
-            )
-        ).alias("_p"),
-    ).select(F.col("_p.s").alias("s"), F.col("_p.t").alias("t"), "factor")
 
 
-def _join_pairs(occ: DataFrame) -> DataFrame:
-    """(s, t, factor) with s < t via the factor self-equi-join."""
-    a = occ.alias("a")
-    b = occ.alias("b")
-    return a.join(
-        b,
-        (F.col("a.factor") == F.col("b.factor"))
-        & (F.col("a.node") < F.col("b.node")),
+def _later_pairs(blocks: DataFrame, diagonal) -> DataFrame:
+    """(s, t, factor): each node s of ``_a`` with the nodes t of ``_b``.
+
+    On a ``diagonal`` row ``_a`` and ``_b`` are the same sorted list and t
+    runs over the nodes after s; otherwise every node of ``_b`` sorts after
+    every node of ``_a``. ``posexplode`` + ``slice`` + ``explode`` are
+    codegen'd generators, so the pairs come out in place, with no shuffle.
+    """
+    later = F.slice("_b", F.col("_p") + 2, F.size("_b"))
+    return blocks.select(
+        "factor", "_b", diagonal.alias("_d"), F.posexplode("_a").alias("_p", "s")
     ).select(
-        F.col("a.node").alias("s"),
-        F.col("b.node").alias("t"),
-        F.col("a.factor").alias("factor"),
+        "s",
+        F.explode(F.when(F.col("_d"), later).otherwise(F.col("_b"))).alias("t"),
+        "factor",
+    )
+
+
+def _hot_blocks(groups: DataFrame) -> DataFrame:
+    """Chunk-pair blocks of each factor, spread over the shuffle width.
+
+    The sorted node list is cut into k = ceil(f / HOT_FACTOR_NODES)
+    consecutive chunks, and each block (i, j) with i <= j carries chunk i
+    as ``_a`` and chunk j as ``_b``, so every pair lies in exactly one
+    block. The blocks are repartitioned to the session's shuffle width: AQE
+    never coalesces an explicit repartition, and it would otherwise fold
+    the blocks (tiny input, quadratic output) back into one task.
+    """
+    width = int(groups.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    last = F.ceil(F.size("_ns") / HOT_FACTOR_NODES).cast("int") - 1
+
+    def chunk(c):
+        return F.slice("_ns", F.col(c) * HOT_FACTOR_NODES + 1, HOT_FACTOR_NODES)
+
+    i = F.explode(F.sequence(F.lit(0), last)).alias("_i")
+    j = F.explode(F.sequence("_i", last)).alias("_j")
+    return (
+        groups.select("factor", "_ns", i)
+        .select("factor", "_ns", "_i", j)
+        .select("factor", "_i", "_j", chunk("_i").alias("_a"), chunk("_j").alias("_b"))
+        .repartition(width, "factor", "_i", "_j")
     )
 
 
 def _pair_instances(
-    occ: DataFrame,
-    salt: int | None,
-    salt_threshold: int,
-    strategy: str = "join",
+    groups: DataFrame, factor_freq_cap: int | None = None
 ) -> DataFrame:
-    """One row per (s, t, factor) with s < t.
+    """One row per (s, t, factor) with s < t, each factor treated by its size.
 
-    ``strategy`` picks the plain-path formulation (see
-    ``cooccurrence_edges`` for the trade-off); with ``salt`` set, factors
-    whose occurrence count exceeds ``salt_threshold`` are joined through S
-    salted sub-joins: the left side gets a deterministic salt from the
-    node id, the right side is replicated to every salt value, so every
-    qualifying pair is still produced exactly once while the heaviest
-    factor group is split across S tasks.
+    The hot branch is left out of the plan when the cap rules hot factors out.
     """
-    plain = _array_pairs if strategy == "array" else _join_pairs
-    if not salt:
-        return plain(occ)
-
-    fcount = occ.groupBy("factor").agg(F.count("*").alias("_fc"))
-    occ_f = occ.join(fcount, "factor")
-    light = occ_f.filter(F.col("_fc") <= salt_threshold).drop("_fc")
-    heavy = occ_f.filter(F.col("_fc") > salt_threshold).drop("_fc")
-
-    light_pairs = plain(light.select("node", "factor"))
-
-    ha = heavy.withColumn("_salt", F.pmod(F.xxhash64("node"), F.lit(salt))).alias("a")
-    hb = (
-        heavy.withColumn(
-            "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)).cast("array<long>"))
-        )
-    ).alias("b")
-    heavy_pairs = ha.join(
-        hb,
-        (F.col("a.factor") == F.col("b.factor"))
-        & (F.col("a._salt") == F.col("b._salt"))
-        & (F.col("a.node") < F.col("b.node")),
-    ).select(
-        F.col("a.node").alias("s"),
-        F.col("b.node").alias("t"),
-        F.col("a.factor").alias("factor"),
+    groups = groups.filter(F.col("factor").isNotNull())
+    ordinary = groups.filter(F.col("_fc") <= HOT_FACTOR_NODES).select(
+        "factor", F.col("_ns").alias("_a"), F.col("_ns").alias("_b")
     )
-    return light_pairs.unionByName(heavy_pairs)
+    pairs = _later_pairs(ordinary, F.lit(True))
+    if factor_freq_cap is None or factor_freq_cap > HOT_FACTOR_NODES:
+        blocks = _hot_blocks(groups.filter(F.col("_fc") > HOT_FACTOR_NODES))
+        pairs = pairs.unionByName(
+            _later_pairs(blocks, F.col("_i") == F.col("_j"))
+        )
+    return pairs
 
 
 def cooccurrence_edges(
@@ -260,11 +255,7 @@ def cooccurrence_edges(
     factor_freq_cap: int | None = None,
     min_frequency: int | None = None,
     prune_zero_mi: str | None = None,
-    salt: int | None = None,
-    salt_threshold: int = DEFAULT_SALT_THRESHOLD,
     limit: int | None = None,
-    eager: bool | None = None,
-    pair_strategy: str = "join",
 ) -> DataFrame:
     """Build the co-occurrence edge table from a (node, factor) table.
 
@@ -273,110 +264,43 @@ def cooccurrence_edges(
     source-index < target-index ordering, generators.py:204, reduces to the
     same unordered pair set).
 
+    ``factor_freq_cap``: drop factors with more than this many nodes.
     ``prune_zero_mi``: name of a computed MI column; rows with value <= 0 are
     dropped (reference cord19kg/utils.py:661-662).
     ``limit``: keep at most n edges — like the reference's early-exit limit
     (generators.py:238-243) the *choice* of edges is not deterministic.
 
-    ``eager=None`` (default) auto-detects: lazy unless the occurrence
-    plan contains a Python/Arrow evaluation stage (``applyInPandas`` /
-    ``mapInPandas`` / pandas UDF — the :func:`occurrences_from_aggregator`
-    hook), in which case it goes eager. A Python stage is the one upstream
-    cost the "re-scan beats persist" argument below never covers: the lazy
-    NPMI/frequency plan re-executes the occurrence expression on up to 5
-    branches, and re-running an Arrow-shuffled Python aggregator 5× is
-    pure loss at every scale (measured on the driver bench: the round-4
-    lazy flip regressed the aggregator query ~25% while speeding up every
-    pure-Catalyst one). The detection reads the ANALYZED logical plan —
-    no job runs.
-
-    ``eager=False``: return the fully lazy plan — no persist, no
-    action; the total-factor count is folded in as a broadcast scalar. The
-    lazy NPMI plan re-executes the occurrence expression on up to 5 plan
-    branches (both self-join sides, the two marginal joins, the total-
-    factor count; no ``ReusedExchange`` appears under AQE). Measured: at
-    sf0.1 suite scale lazy wins decisively (3.2s vs 6.8–11.3s eager —
-    round 3's regression), while the 30 M-occurrence-row stress A/B has
-    FLIPPED across runs on the shared VM (lazy 53.7 vs eager 122.0 one
-    day, eager 117.9 vs lazy 186.7 the next) — at byte-sizes one box can
-    hold, the persist-vs-rescan trade is inside co-tenant noise, which is
-    exactly why the default discriminator is the Python-stage test above
-    and not a size threshold.
-
-    ``eager=True`` persists the deduplicated occurrence table, materializes
-    the edge table (``localCheckpoint``), and releases the cache before
-    returning. Pass it when the occurrence expression is SCAN-DOMINATED —
-    the 10^12-file corpus case, where ``occurrences_from_*`` reads wide
-    document text and emits a far smaller (node, factor) table: there the
-    5 branch re-scans each re-read the full corpus and one shared pass is
-    the only sane plan. The discriminator is source-scan cost vs derived-
-    table size, which no local benchmark at parquet-page-cache scale can
-    exhibit — hence a caller knob with both measurements documented, not a
-    size-threshold heuristic (round 4 tried one; both of its regimes were
-    measurably wrong).
+    An occurrence plan with a Python/Arrow stage (the
+    :func:`occurrences_from_aggregator` hook) would re-run on each of the
+    plan's three reads of the factor groups, so there the groups are
+    persisted and the edge table is materialized (``localCheckpoint``)
+    before returning. A pure-Catalyst input stays a lazy plan.
     """
     for s in statistics:
         if s not in STATISTICS:
             raise ValueError(f"unknown statistic {s!r}; supported: {STATISTICS}")
 
-    if eager is None:
-        eager = plan_has_python_stage(occ)
-
-    occ_raw = occ.select(
-        F.col("node").cast("string").alias("node"),
-        F.col("factor").cast("string").alias("factor"),
-    )
-    occ = occ_raw.distinct()
-
+    materialize = plan_has_python_stage(occ)
+    groups = _factor_groups(occ)
     if factor_freq_cap is not None:
-        fc = occ.groupBy("factor").agg(F.count("*").alias("_fc"))
-        occ = (
-            occ.join(fc.filter(F.col("_fc") <= factor_freq_cap), "factor")
-            .drop("_fc")
+        groups = groups.filter(
+            F.col("factor").isNotNull() & (F.col("_fc") <= factor_freq_cap)
         )
+    if materialize:
+        groups = groups.persist()
 
-    if eager:
-        occ = occ.persist()
-
-    needs_mi = any(s != "frequency" for s in statistics)
-    # Pair-generation strategy (``pair_strategy``): "join" (default) runs
-    # the classic factor self-equi-join over the deduplicated occurrence
-    # table — codegen'd pair generation, AQE-splittable, the right shape
-    # when factors hold MANY nodes (dense factors: a 30-node factor emits
-    # 435 pairs, and the nested array transform below is interpreted).
-    # "array" aggregates each factor's node set and emits pairs with a
-    # nested transform — one exchange of the occurrence table instead of
-    # three, measurably faster when factors hold FEW nodes (sparse
-    # factors, e.g. ≤ ~8 nodes each; measured at sf0.1: parts graph
-    # (≈4 nodes/factor) 1.8s → 1.35s, supplier graph (≈30 nodes/factor)
-    # 3.6s → 5.5s the other way). The pair multiset is identical.
-    if pair_strategy not in ("join", "array"):
-        raise ValueError("pair_strategy must be 'join' or 'array'")
-    # On the lazy, uncapped, unsalted ARRAY path the pair branch reads the
-    # RAW projection: ``collect_set`` inside ``_array_pairs`` dedups
-    # duplicate occurrence rows itself, so the pair branch skips the
-    # distinct's exchange entirely. Join/capped/salted paths need the
-    # deduplicated (and capped) table, and the eager path shares the
-    # persisted one.
-    pairs_occ = (
-        occ_raw
-        if (
-            pair_strategy == "array"
-            and not eager
-            and factor_freq_cap is None
-            and not salt
-        )
-        else occ
-    )
-    pairs = _pair_instances(pairs_occ, salt, salt_threshold, pair_strategy)
-
+    pairs = _pair_instances(groups, factor_freq_cap)
     aggs = [F.count("*").alias("frequency")]
     if keep_common_factors:
         aggs.append(F.sort_array(F.collect_set("factor")).alias("common_factors"))
     edges = pairs.groupBy(F.col("s").alias("src"), F.col("t").alias("dst")).agg(*aggs)
 
-    if needs_mi:
-        node_freq = occ.groupBy("node").agg(F.count("*").alias("_nf"))
+    if any(s != "frequency" for s in statistics):
+        node_freq = (
+            groups.select(F.explode("_ns").alias("node"))
+            .groupBy("node")
+            .agg(F.count("*").alias("_nf"))
+        )
         edges = (
             edges.join(node_freq.withColumnRenamed("node", "src"), "src")
             .withColumnRenamed("_nf", "_s_freq")
@@ -386,13 +310,9 @@ def cooccurrence_edges(
         if total_factor_instances is not None:
             total = F.lit(total_factor_instances)
         else:
-            # Reference default: |union of all factor sets|
-            # (generators.py:363-376) — folded into the plan as a broadcast
-            # 1-row scalar instead of a plan-build-time count() action, so
-            # building the edge table stays a single job.
-            totals = occ.agg(
-                F.countDistinct("factor").alias("_total_factors")
-            )
+            # Reference default: |union of all factor sets| (generators.py:
+            # 363-376), one group per factor, as a broadcast 1-row scalar.
+            totals = groups.agg(F.count("factor").alias("_total_factors"))
             edges = edges.crossJoin(F.broadcast(totals))
             total = F.col("_total_factors")
         for stat in statistics:
@@ -405,12 +325,9 @@ def cooccurrence_edges(
                     F.col("frequency"), F.col("_s_freq"), F.col("_t_freq"), total, mitype
                 ),
             )
-        edges = edges.drop("_s_freq", "_t_freq", "_total_factors")
 
-    out_cols = ["src", "dst"] + [s for s in statistics]
-    if keep_common_factors:
-        out_cols.append("common_factors")
-    edges = edges.select(*out_cols)
+    extra = ["common_factors"] if keep_common_factors else []
+    edges = edges.select("src", "dst", *statistics, *extra)
 
     if min_frequency is not None:
         edges = edges.filter(F.col("frequency") >= min_frequency)
@@ -418,9 +335,9 @@ def cooccurrence_edges(
         edges = edges.filter(F.col(prune_zero_mi) > 0)
     if limit is not None:
         edges = edges.limit(limit)
-    if eager:
+    if materialize:
         edges = edges.localCheckpoint()
-        occ.unpersist()
+        groups.unpersist()
     return edges
 
 

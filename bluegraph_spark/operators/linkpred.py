@@ -407,6 +407,9 @@ def fit_edge_predictor(
     )
     stats = obs.get
     n_rows = int(stats["_n"] or 0)
+    if n_rows == 0:
+        release_local_checkpoint(cached)
+        raise ValueError("fit_edge_predictor: empty feature table")
     means, stds = [], []
     for c in fcols:
         m = float(stats[f"_m_{c}"])

@@ -5,7 +5,7 @@ fully inside Spark (no driver-side materialization): ``spark.range`` over
 file ids, token draws via a seeded xxhash64-based mix so the same (seed,
 file, position) always yields the same token. Token ranks are Zipf(1.1)-
 skewed so a handful of stopword-like tokens appear in most files —
-exercising the hub-vertex salting path exactly like real code corpora do.
+exercising the hot-factor block path exactly like real code corpora do.
 
 No external data, no RNG state: everything derives from column expressions,
 so the corpus is reproducible at any scale and identical across runs and

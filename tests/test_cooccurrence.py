@@ -225,18 +225,101 @@ def test_multiset_intersection(spark):
     assert out[0].src == "x" and out[0].dst == "y" and out[0].frequency == 3
 
 
-def test_salting_result_identical(spark):
-    # hub factor: one factor shared by 40 nodes, plus background factors
-    rows = [(f"n{i:03d}", "hub") for i in range(40)]
-    rows += [(f"n{i:03d}", f"f{i % 7}") for i in range(40)]
+def edge_oracle(rows, cap=None):
+    """Brute-force edges {(s, t): (frequency, npmi, common_factors)}.
+
+    Occurrence rows are deduplicated; ``cap`` drops the NULL factor and
+    every factor with more distinct rows (a NULL node included) than the
+    cap. Marginals count every remaining row of a node, its NULL factor
+    included; the total counts the distinct non-NULL factors. Only
+    non-NULL nodes sharing a non-NULL factor pair up.
+    """
+    from collections import Counter, defaultdict
+
+    occ = set(rows)
+    if cap is not None:
+        size = Counter(f for _, f in occ)
+        occ = {(n, f) for n, f in occ if f is not None and size[f] <= cap}
+    marginal = Counter(n for n, _ in occ)
+    total = len({f for _, f in occ if f is not None})
+    fac = defaultdict(set)
+    for n, f in occ:
+        if n is not None and f is not None:
+            fac[n].add(f)
+    out = {}
+    for s in fac:
+        for t in fac:
+            common = fac[s] & fac[t]
+            if s < t and common:
+                co = len(common)
+                npmi = mi_oracle(co, marginal[s], marginal[t], total, "normalized")
+                out[(s, t)] = (co, npmi, sorted(common))
+    return out
+
+
+def assert_matches_oracle(edges, want):
+    got = {(r.src, r.dst): r for r in edges.collect()}
+    assert set(got) == set(want)
+    for key, (co, npmi, common) in want.items():
+        assert got[key].frequency == co
+        assert got[key].npmi == pytest.approx(npmi, abs=1e-12)
+        assert got[key].common_factors == common
+
+
+def test_hot_factor_blocks(spark, monkeypatch):
+    """A factor above HOT_FACTOR_NODES is built in chunk-pair blocks: same
+    edges as the oracle, and its pairs spread over tasks instead of one."""
+    from bluegraph_spark.operators import cooccurrence as cooc
+
+    monkeypatch.setattr(cooc, "HOT_FACTOR_NODES", 16)
+    rows = [(f"n{i:03d}", "hub") for i in range(300)]
+    rows += [(f"n{i:03d}", f"f{i % 7}") for i in range(0, 300, 3)]
     occ = spark.createDataFrame(rows, "node string, factor string")
-    plain = cooccurrence_edges(occ, statistics=["frequency"]).collect()
-    salted = cooccurrence_edges(
-        occ, statistics=["frequency"], salt=4, salt_threshold=10
-    ).collect()
-    assert sorted((r.src, r.dst, r.frequency) for r in plain) == sorted(
-        (r.src, r.dst, r.frequency) for r in salted
+    edges = cooccurrence_edges(
+        occ, statistics=["frequency", "npmi"], keep_common_factors=True
     )
+    assert_matches_oracle(edges, edge_oracle(rows))
+
+    hub = cooc._pair_instances(cooc._factor_groups(occ)).filter(
+        F.col("factor") == "hub"
+    )
+    per_task = [
+        r["n"]
+        for r in hub.groupBy(F.spark_partition_id().alias("p"))
+        .agg(F.count("*").alias("n"))
+        .collect()
+    ]
+    assert sum(per_task) == 300 * 299 // 2
+    assert max(per_task) / sum(per_task) <= 0.5, per_task
+
+
+DEGENERATE = {
+    "empty": [],
+    "single_node": [("a", "f1")],
+    "duplicate_rows": [("a", "f1"), ("a", "f1"), ("b", "f1"), ("b", "f1"), ("b", "f2")],
+    "null_node": [("a", "f1"), ("b", "f1"), (None, "f1"), (None, "f2"), ("a", "f3")],
+    "null_factor": [("a", "f1"), ("b", "f1"), ("a", None), ("c", None)],
+    "one_node_factor": [("a", "f1"), ("b", "f1"), ("c", "f2"), ("a", "f3")],
+}
+
+
+@pytest.mark.parametrize("case", sorted(DEGENERATE))
+def test_degenerate_inputs(spark, case):
+    """Empty, single-node, duplicate and NULL inputs under ANSI, capped and
+    uncapped. A NULL factor never pairs its nodes: ``null_factor`` has the
+    one edge (a, b)."""
+    rows = DEGENERATE[case]
+    occ = spark.createDataFrame(rows, "node string, factor string")
+    for cap in (None, 2):
+        edges = cooccurrence_edges(
+            occ,
+            statistics=["frequency", "npmi"],
+            keep_common_factors=True,
+            factor_freq_cap=cap,
+        )
+        assert_matches_oracle(edges, edge_oracle(rows, cap))
+    if case == "null_factor":
+        assert set(edge_oracle(rows)) == {("a", "b")}
 
 
 def test_cooccurrence_random_oracle(spark):

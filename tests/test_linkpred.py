@@ -257,6 +257,16 @@ class TestEdgePredictor:
         bad = pred.filter("score < 0 OR score > 1").count()
         assert bad == 0
 
+    def test_fit_empty_table_raises_named_error(self, spark):
+        from bluegraph_spark.operators.linkpred import fit_edge_predictor
+
+        df = spark.createDataFrame([], "f1 double, f2 double, y int")
+        before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+        with pytest.raises(ValueError, match="empty feature table"):
+            fit_edge_predictor(df, "y", ["f1", "f2"])
+        after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+        assert after <= before
+
     def test_constant_feature_passthrough(self, spark):
         """A zero-variance feature must not divide by zero; its weight
         stays finite and the fit still uses the informative column."""

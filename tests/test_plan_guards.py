@@ -120,7 +120,7 @@ def test_plan_has_python_stage_detects_all_udf_shapes(spark):
 
 
 def test_cooccurrence_auto_eager_on_python_occurrence(spark):
-    """eager=None goes eager (localCheckpointed result — LogicalRDD plan,
+    """The builder goes eager (localCheckpointed result — LogicalRDD plan,
     single execution of the Python stage) for an applyInPandas occurrence
     table, and stays lazy for a pure-Catalyst one."""
     import pandas as pd
@@ -153,3 +153,28 @@ def test_cooccurrence_auto_eager_on_python_occurrence(spark):
     a = sorted(map(tuple, lazy_edges.collect()))
     b = sorted(map(tuple, eager_edges.collect()))
     assert a == b
+
+
+def test_cooccurrence_exchange_budget(spark, no_broadcast):
+    """Executed shuffles of one NPMI build, capped at or below
+    HOT_FACTOR_NODES and uncapped: every branch reads the one per-factor
+    aggregation. A cap that rules out hot factors leaves the hot-block
+    repartition out of the plan altogether."""
+    from bluegraph_spark.operators.cooccurrence import (
+        HOT_FACTOR_NODES,
+        cooccurrence_edges,
+    )
+    from bluegraph_spark.plans.planinfo import executed_exchange_count
+
+    assert 5 <= HOT_FACTOR_NODES
+    rows = [(f"n{i % 60}", f"f{(i * 7) % 45}") for i in range(400)]
+    occ = spark.createDataFrame(rows, "node string, factor string")
+    budgets = {}
+    for cap in (5, None):
+        edges = cooccurrence_edges(
+            occ, statistics=["frequency", "npmi"], factor_freq_cap=cap
+        )
+        assert len(edges.collect()) == 90
+        plan = edges._jdf.queryExecution().executedPlan().toString()
+        budgets[cap] = (executed_exchange_count(edges), "REPARTITION_BY_NUM" in plan)
+    assert budgets == {5: (6, False), None: (8, True)}, budgets
